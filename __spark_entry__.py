@@ -341,17 +341,18 @@ def q_battery_1h(spark, sf):
     """Extended aggregation battery per (user_id, hour bucket)
     (SURVEY.md §2.6).
 
-    count_distinct is computed in a SEPARATE co-partitioned aggregation
-    and joined back (optimization guide §2.3 "aggregate before you
+    count_distinct is computed in a SEPARATE aggregation and joined
+    back (optimization guide §2.3 "aggregate before you
     shuffle"): mixing a distinct aggregate with the buffer-heavy battery
     makes Catalyst rewrite the whole agg to group by
     (keys, value) first, building and exchanging one percentile/min_by
     buffer PER DISTINCT VALUE (≈ per event on continuous doubles —
     measured 4.9 s vs 2.9 s without the distinct at sf1-shape). The
     standalone distinct branch plans as two cheap codegen hash
-    aggregates; the join keys equal both aggs' grouping keys, so no
-    extra exchange. Values are identical: same clean() input, same
-    count_distinct arithmetic, inner join on the identical group set."""
+    aggregates. Values are identical: same clean() input, same
+    count_distinct arithmetic, null-safe inner join on the identical group
+    set (NULL keys included; under a sort-merge join the null-safe keys
+    cost one exchange per side of the aggregated frames)."""
     from getml_community_spark.operators.aggregates import battery, clean
 
     ev = _spread(_load(spark, sf, "events"))
@@ -376,7 +377,14 @@ def q_battery_1h(spark, sf):
             "count_distinct"
         )
     )
-    out = main.join(cd, ["user_id", "bucket_start"])
+    # null-safe keys: a NULL user_id / bucket_start group is a group
+    # like any other (the single-agg battery and the oracle keep it)
+    m, c = main.alias("m"), cd.alias("c")
+    out = m.join(
+        c,
+        F.col("m.user_id").eqNullSafe(F.col("c.user_id"))
+        & F.col("m.bucket_start").eqNullSafe(F.col("c.bucket_start")),
+    ).select("m.*", "c.count_distinct")
     # column order must stay byte-identical to the single-agg battery's
     # emission order (driver gate is column-order sensitive):
     # count_distinct sits between stddev_pop and first
@@ -2089,7 +2097,9 @@ def _md5_tokens_arrow():
             md5, split = hashlib.md5, rx.split
             return pd.Series(
                 [
-                    [
+                    None
+                    if x is None
+                    else [
                         int(md5(w.encode()).hexdigest()[:15], 16) % 65536
                         for w in split(x.lower())
                         if w

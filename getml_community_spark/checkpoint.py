@@ -14,6 +14,15 @@ listing the live data directories; readers see a consistent snapshot;
 partition deletes are metadata-only (a new manifest that drops entries);
 nothing is ever mutated in place. The ``entries`` of a manifest are
 (path, partition-values) pairs — i.e. Iceberg's manifest-file model.
+
+Each entry also carries its data-file schema (``schema``: the
+``StructType`` JSON form of the written columns, partition columns
+left out) and the partition column types (``types``), so the schema is
+fixed at write time the way an Iceberg table's is, and never inferred
+at query time: a read builds its DataFrame from the manifest alone,
+with no Parquet footer scan, and launches no Spark job until an
+action runs. Entries written before the field existed have no
+``schema`` and fall back to inference.
 """
 
 from __future__ import annotations
@@ -25,6 +34,7 @@ import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 __all__ = ["SnapshotTable", "LineageLog", "JobState"]
 
@@ -42,7 +52,7 @@ def _atomic_write_json(path: str, obj) -> None:
 class Snapshot:
     snapshot_id: str
     parent: str | None
-    entries: list[dict]  # [{"path": ..., "partition": {...}}]
+    entries: list[dict]  # [{"path", "partition", "types", "schema"}]
     committed_at: float = field(default_factory=time.time)
     # snapshot-level metadata, carried forward commit-to-commit; used by
     # streaming ingestion to make the manifest commit itself the
@@ -63,6 +73,15 @@ class SnapshotTable:
           data/<append-uuid>/...parquet   (one dir per append, immutable)
           snapshots/<id>.json             (manifest: live entries)
           HEAD                            (current snapshot id, atomic)
+
+    A manifest entry is ``{"path", "partition", "types", "schema"}``:
+    the leaf data directory, its partition values, the partition column
+    types (partitioned tables only; directory names are strings) and
+    the data-file schema as ``StructType`` JSON. Reads pass ``schema``
+    to the Parquet reader instead of inferring it from file footers;
+    an entry without it (written before the field existed) is read
+    with inference. Schemas are per entry, so additive evolution
+    works: entries are unioned with ``allowMissingColumns``.
     """
 
     def __init__(self, root: str, partition_by: list[str] | None = None):
@@ -181,25 +200,7 @@ class SnapshotTable:
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(path)
-        new_entries = []
-        if self.partition_by:
-            # capture partition column types so read() can restore them
-            # (directory names are strings; round-1 ADVICE)
-            types = {
-                f.name: f.dataType.simpleString()
-                for f in df.schema.fields
-                if f.name in self.partition_by
-            }
-            for sub in self._partition_dirs(path):
-                new_entries.append(
-                    {
-                        "path": sub,
-                        "partition": self._parse_partition(sub, path),
-                        "types": types,
-                    }
-                )
-        else:
-            new_entries.append({"path": path, "partition": {}})
+        new_entries = self._new_entries(path, df.schema)
         with self._writer_lock():
             cur = self.current()
             meta = None
@@ -212,6 +213,32 @@ class SnapshotTable:
                 meta["stream_batches"] = sb
             entries = (cur.entries if cur else []) + new_entries
             return self._commit(entries, meta)
+
+    def _new_entries(self, path: str, schema: StructType) -> list[dict]:
+        """Manifest entries for a freshly written append dir ``path``
+        whose rows had ``schema``: one per leaf partition dir, each
+        recording the partition column types (so read() can restore
+        them — directory names are strings; round-1 ADVICE) and the
+        data-file schema (so read() never infers it)."""
+        data = StructType(
+            [f for f in schema.fields if f.name not in self.partition_by]
+        ).jsonValue()
+        if not self.partition_by:
+            return [{"path": path, "partition": {}, "schema": data}]
+        types = {
+            f.name: f.dataType.simpleString()
+            for f in schema.fields
+            if f.name in self.partition_by
+        }
+        return [
+            {
+                "path": sub,
+                "partition": self._parse_partition(sub, path),
+                "types": types,
+                "schema": data,
+            }
+            for sub in self._partition_dirs(path)
+        ]
 
     def _partition_dirs(self, base: str) -> list[str]:
         """Leaf partition directories under an append dir."""
@@ -307,20 +334,10 @@ class SnapshotTable:
         if not selected:
             return report
 
-        from functools import reduce
-
         from pyspark.sql import functions as F
 
-        dfs, types = [], {}
-        for es in selected.values():
-            for e in es:
-                d = spark.read.parquet(e["path"])
-                types = e.get("types", types) or types
-                for k, v in e["partition"].items():
-                    d = d.withColumn(k, F.lit(v).cast(types.get(k, "string")))
-                dfs.append(d)
-        df = reduce(lambda a, b: a.unionByName(b), dfs)
-
+        rewrite = [e for es in selected.values() for e in es]
+        df = self._entries_to_df(spark, rewrite, rewrite[0])
         dir_id = uuid.uuid4().hex[:16]
         path = os.path.join(self.root, "data", dir_id)
         if self.partition_by:
@@ -330,17 +347,9 @@ class SnapshotTable:
                 .partitionBy(*self.partition_by)
                 .parquet(path)
             )
-            new_entries = [
-                {
-                    "path": sub,
-                    "partition": self._parse_partition(sub, path),
-                    "types": types,
-                }
-                for sub in self._partition_dirs(path)
-            ]
         else:
             df.coalesce(1).write.mode("error").parquet(path)
-            new_entries = [{"path": path, "partition": {}}]
+        new_entries = self._new_entries(path, df.schema)
 
         # Commit under the writer lock, re-reading the CURRENT manifest:
         # the expensive rewrite above ran lock-free, so appends/deletes
@@ -445,16 +454,18 @@ class SnapshotTable:
     @staticmethod
     def _entry_df(spark: SparkSession, e: dict):
         """One manifest entry → DataFrame with its partition columns
-        restored as typed literals."""
+        restored as typed literals. The entry's recorded schema is
+        handed to the reader, so building the frame runs no
+        footer-inference job; legacy entries without one infer it."""
         from pyspark.sql import functions as F
 
-        d = spark.read.parquet(e["path"])
+        reader = spark.read
+        if "schema" in e:
+            reader = reader.schema(StructType.fromJson(e["schema"]))
+        d = reader.parquet(e["path"])
         types = e.get("types", {})
         for k, v in e["partition"].items():
-            col = F.lit(v)
-            if k in types:
-                col = col.cast(types[k])
-            d = d.withColumn(k, col)
+            d = d.withColumn(k, F.lit(v).cast(types.get(k, "string")))
         return d
 
     def _entries_to_df(
@@ -462,21 +473,14 @@ class SnapshotTable:
     ) -> DataFrame:
         """Union a manifest entry list; an empty list yields an
         empty-but-typed frame from ``fallback_entry``'s schema. The ONE
-        assembly path for read() and changes() — a typing/evolution fix
-        here fixes both."""
+        assembly path for read(), changes() and compaction — a
+        typing/evolution fix here fixes all three."""
         from functools import reduce
 
         from pyspark.sql import functions as F
 
         if not entries:
-            d = spark.read.parquet(fallback_entry["path"]).where(F.lit(False))
-            types = fallback_entry.get("types", {})
-            for k, v in fallback_entry["partition"].items():
-                col = F.lit(v)
-                if k in types:
-                    col = col.cast(types[k])
-                d = d.withColumn(k, col)
-            return d
+            return self._entry_df(spark, fallback_entry).where(F.lit(False))
         # allowMissingColumns: additive schema evolution (e.g. the
         # Gorilla chunk-index columns added to an existing segments
         # store) — entries written before the new columns read back with

@@ -92,10 +92,15 @@ def fastprop_features(
         FastProp.cpp:714-753) for each (pop_col, peri_col) in
         ``same_units_pairs``.
 
-    Feature columns are named ``{agg}__{value_col}__{condition}``. All
-    features compute in ONE groupBy over the match frame (single
-    shuffle); the result left-joins back onto the population so rows
-    with no matches keep count=0 / sum=0.0 / NULL.
+    Feature columns are named ``{agg}__{value_col}__{condition}``. The
+    match is a LEFT join (window predicate in the join condition), so
+    ONE ``groupBy(population_id)`` over the match frame computes every
+    feature and also covers population rows with no matches — they
+    keep count=0 / sum=0.0 / NULL — with no rejoin onto the population.
+    Requires ``population_id`` to uniquely identify population rows
+    (the as-of contract's row id): rows sharing an id collapse into
+    one output row. Non-id population columns are carried as
+    ``first()`` per group.
     """
     for a in aggs:
         if a not in FASTPROP_AGGS:

@@ -798,13 +798,16 @@ class RollupJob:
         4. with ``realtime=True``, unions an on-the-fly rollup of input
            days not yet committed to the chosen tier (the un-rolled
            head), so results are as fresh as raw without waiting for the
-           next ``run()``.
+           next ``run()``. When every day of the range is committed the
+           head is empty, and the input is not read at all.
 
         ``t_from``/``t_to`` must be step-aligned (exact bucket
         semantics). Days expired from the chosen tier by retention are
         absent from the result — query a coarser step (served by a
         longer-retained tier) for old history.
         """
+        import datetime as dt
+
         from ..operators.rollup import rollup_to_step
 
         sec = int(step_seconds)
@@ -812,10 +815,18 @@ class RollupJob:
             self.tables, t_from, t_to, sec, allow_empty=realtime
         )
 
-        if realtime:
+        done = self._done_days(tier) if realtime else set()
+        span = [
+            str(d_from + dt.timedelta(days=i))
+            for i in range((d_to - d_from).days + 1)
+        ]
+        if realtime and not done.issuperset(span):
+            # some day of the range is not committed: serve it from raw.
+            # A fully committed range skips this branch — its head would
+            # be empty by construction (every day is in ``done``), yet
+            # still cost an input read and a scan job.
             from ..operators.rollup import rollup_from_raw
 
-            done = self._done_days(tier)
             inp = self._input()
             ts_epoch = F.col(self.spec.ts_col).cast("timestamp").cast("long")
             head = inp.where(

@@ -424,6 +424,14 @@ def test_query_range_realtime_head(spark, corpus_path, tmp_path):
     done = job.query_range(t0, t1, 3600).toPandas()
     assert_frames_equal_unordered(done, want, ["source", "bucket_start"])
 
+    # fully committed range: realtime serves the tier alone — same rows
+    # as realtime=False, and no input file enters the plan
+    committed = job.query_range(t0, t1, 3600, realtime=True)
+    assert not [f for f in committed.inputFiles() if corpus_path in f]
+    assert_frames_equal_unordered(
+        committed.toPandas(), done, ["source", "bucket_start"]
+    )
+
     # fresh store (never run): realtime serves entirely from raw;
     # non-realtime raises (nothing committed)
     cold = RollupJob(spark, RollupSpec(), corpus_path, str(tmp_path / "cold"))
@@ -431,6 +439,79 @@ def test_query_range_realtime_head(spark, corpus_path, tmp_path):
     assert_frames_equal_unordered(cold_df, want, ["source", "bucket_start"])
     with pytest.raises(FileNotFoundError):
         cold.query_range(t0, t1, 3600)
+
+
+def _jobs_launched(spark, build) -> int:
+    """Spark jobs launched while ``build()`` runs. A sentinel job in a
+    second group runs afterwards: job events reach the status store in
+    order, so once the sentinel is visible every job of ``build`` is."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group, sentinel = f"build-{uuid.uuid4().hex}", f"sentinel-{uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(group, "build")
+        build()
+        sc.setJobGroup(sentinel, "sentinel")
+        sc.parallelize([0]).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(sentinel) and time.time() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(sentinel), "sentinel job never seen"
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def test_reads_use_manifest_schema(spark, corpus_path, tmp_path):
+    """Every manifest entry records its data schema, so building read(),
+    read(partition_filter=...) and changes() frames launches no Spark
+    job (no Parquet footer inference); for every table family of a
+    RollupJob store the pinned read equals a legacy, schema-less
+    manifest's inferred read, schema and rows."""
+    spec = RollupSpec(hist_bin_width=16.0, distinct_col="doc_id")
+    job = RollupJob(spark, spec, corpus_path, str(tmp_path / "pinned"))
+    job.run(max_partitions=7)
+    tier = job.tables["1h"]
+    s1 = tier.current_snapshot_id()
+    job.run()
+    tables = job._all_tables()
+    assert {"hist_1h", "dist_1h", "segments"} <= set(tables)
+    assert {"t_min", "t_max"} <= set(job.segments.read(spark).columns)
+
+    def build():
+        for t in tables.values():
+            t.read(spark)
+            t.read(spark, partition_filter=lambda p: p["day"] <= "2025-01-03")
+            t.read(spark, partition_filter=lambda p: False)
+        tier.changes(spark, s1)
+        tier.changes(spark, tier.current_snapshot_id())  # empty delta
+
+    assert _jobs_launched(spark, build) == 0
+
+    for name, t in tables.items():
+        snap = t.current()
+        assert all("schema" in e for e in snap.entries), name
+        legacy_sid = t._commit(
+            [{k: v for k, v in e.items() if k != "schema"} for e in snap.entries],
+            operation="replace",
+        )
+        pinned = t.read(spark, snapshot_id=snap.snapshot_id)
+        legacy = t.read(spark, snapshot_id=legacy_sid)
+        assert pinned.schema == legacy.schema, name
+        assert pinned.count() == legacy.count() > 0, name
+        assert pinned.exceptAll(legacy).count() == 0, name
+        assert legacy.exceptAll(pinned).count() == 0, name
+
+    # compaction reads legacy entries and writes schema-carrying ones
+    legacy_rows = tier.read(spark).toPandas()
+    assert tier.compact_partitions(spark, min_files=1)["partitions"] > 0
+    assert all("schema" in e for e in tier.current().entries)
+    assert_frames_equal_unordered(
+        tier.read(spark).toPandas(), legacy_rows, ["source", "bucket_start", "day"]
+    )
 
 
 # --------------------------------------------------------------------- #

@@ -76,6 +76,10 @@ def test_query_matches_oracle(spark, ddb, name):
         assert (g_tz is None) == (w_tz is None), (
             name, gc, f"tz-awareness mismatch: spark={g_tz} oracle={w_tz}"
         )
+    _assert_frames_match(name, got_raw, want_raw)
+
+
+def _assert_frames_match(name, got_raw, want_raw):
     got = _canon(got_raw)
     want = _canon(want_raw)
     assert len(got) == len(want), (name, len(got), len(want))
@@ -113,3 +117,47 @@ def test_rows_only_queries_run(spark, name):
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
+
+
+def test_battery_1h_keeps_null_user_id_group(spark, tmp_path):
+    """A NULL user_id is a group like any other: battery_1h's separate
+    count_distinct aggregation must join back null-safely, or the NULL
+    group vanishes while the oracle keeps it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ev = pq.read_table(f"{SF}/events.parquet")
+    uid = ev.column("user_id").to_pylist()
+    for i in range(0, len(uid), 7):
+        uid[i] = None
+    ev = ev.set_column(
+        ev.schema.get_field_index("user_id"), "user_id", pa.array(uid, pa.int64())
+    )
+    pq.write_table(ev, str(tmp_path / "events.parquet"))
+
+    got = entrymod.queries()["battery_1h"](spark, str(tmp_path)).toPandas()
+    assert got["user_id"].isna().any()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'events.parquet'}')"
+    )
+    want = con.execute(entrymod.oracle_sql()["battery_1h"]).df()
+    _assert_frames_match("battery_1h", got, want)
+
+
+def test_md5_tokens_arrow_null_text_is_null(spark):
+    """NULL text tokenizes to NULL in the Arrow kernel, as in the JVM
+    form it replaces, instead of failing the task."""
+    docs = spark.createDataFrame(
+        [(1, "Hello, World 42"), (2, None), (3, "")], "doc_id long, text string"
+    )
+    rows = docs.select(
+        "doc_id",
+        entrymod._md5_tokens_arrow().alias("arrow"),
+        entrymod._md5_tokens_expr().alias("jvm"),
+    ).collect()
+    by_id = {r.doc_id: (r.arrow, r.jvm) for r in rows}
+    assert by_id[2] == (None, None)
+    assert by_id[1][0] == by_id[1][1] and len(by_id[1][0]) == 3
+    assert by_id[3][0] == by_id[3][1] == []
