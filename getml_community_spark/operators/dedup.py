@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .textstats import _spread
+
 __all__ = [
     "exact_dedup",
     "shingles",
@@ -158,10 +160,9 @@ def shingles_arrow(text, n: int = 5, charset: str = "ascii") -> Column:
             split = rx.split
             out = []
             for x in s:
-                if x is None:
-                    out.append(None)
-                    continue
-                w = [t for t in split(x.lower()) if t]
+                # NULL text shingles like empty text: [""], as the JVM
+                # shingles does (concat_ws over a NULL slice is "")
+                w = [t for t in split((x or "").lower()) if t]
                 k = max(len(w) - (n - 1), 1)
                 out.append(
                     list(
@@ -176,11 +177,6 @@ def shingles_arrow(text, n: int = 5, charset: str = "ascii") -> Column:
         udf = pandas_udf(_sh, "array<string>").asNondeterministic()
         _SHINGLE_UDFS[key] = udf
     return udf(text)
-
-
-def _hash_family(col: Column, seed: int) -> Column:
-    """One member of a 64-bit hash family: xxhash64 with per-family salt."""
-    return F.xxhash64(col, F.lit(seed))
 
 
 def minhash_signature(shingle_col: Column, num_hashes: int = 128) -> Column:
@@ -300,13 +296,8 @@ def minhash_lsh_pairs(
     """
     rows_per_band = num_hashes // bands
     # The shingle pipeline is interpreted (higher-order array functions
-    # don't codegen): spread a narrow input across the cluster first —
-    # metadata no-op when the corpus already has >= default parallelism
-    # partitions (the normal case at scale).
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)
+    # don't codegen): spread a narrow input across the cluster first.
+    df = _spread(df)
     # shingle_expr overrides the text-derived shingle set (e.g.
     # token_shingles over int-ID sequences) — the rest of the pipeline
     # is payload-agnostic
@@ -561,10 +552,7 @@ def duplicated_token_spans(
         toks_int = F.transform(toks, lambda t: F.xxhash64(t))
     else:
         toks_int = F.transform(toks, lambda t: t.cast("long"))
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)  # spread the (interpreted) tokenize
+    df = _spread(df)  # spread the (interpreted) tokenize
     pos = (
         df.where(F.size(toks) >= k)
         .select(
@@ -645,10 +633,7 @@ def minhash_lsh_pairs_verified(
     # old shape re-tokenized the raw text per candidate pair (a doc in k
     # pairs shingled k+1 times; the token path, dedup.py:385, already
     # worked this way). Same arrays → identical jaccard values.
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)  # spread the interpreted shingle pass
+    df = _spread(df)  # spread the interpreted shingle pass
     sh_tbl = df.select(
         F.col(id_col).alias("id"),
         shingles_arrow(F.col(text_col), shingle_n).alias("__sh"),
@@ -662,7 +647,7 @@ def minhash_lsh_pairs_verified(
     joined = cand.join(ta, "id_a").join(tb, "id_b")
     # Spread the candidate pairs BEFORE the per-pair set ops: AQE
     # coalesces the small candidate frame to one partition otherwise.
-    joined = joined.repartition(target)
+    joined = joined.repartition(df.sparkSession.sparkContext.defaultParallelism)
     inter = F.size(F.array_intersect("__sh_a", "__sh_b")).cast("double")
     union = F.size(F.array_union("__sh_a", "__sh_b")).cast("double")
     out = joined.select(
@@ -841,10 +826,7 @@ def simhash_pairs(
     chunks (pigeonhole: hamming ≤ 3 ⇒ at least one of 4 chunks equal —
     EXACT recall for max_hamming ≤ 3; above 3 the blocking is a
     heuristic), then filter exact hamming distance ≤ max_hamming."""
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)  # interpreted fingerprint: spread it
+    df = _spread(df)  # interpreted fingerprint: spread it
     fp = simhash(F.col(text_col), token_hash=token_hash)
     base = df.select(F.col(id_col).alias("id"), fp.alias("fp"))
     chunks = base.select(
@@ -1114,11 +1096,8 @@ def semdedup(
     )
     # the assignment expression is n_centroids interpreted higher-order
     # cosines per row — spread narrow (single-file) inputs across the
-    # cluster first (metadata no-op when already parallel; CLAUDE.md)
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)
+    # cluster first
+    df = _spread(df)
     assigned = df.select(
         F.col(id_col).alias("__id"),
         v.alias("__v"),

@@ -237,13 +237,17 @@ def _let(arr: Column, body) -> Column:
 
 
 def _spread(df: DataFrame) -> DataFrame:
-    """Repartition a narrow input to the cluster's default parallelism.
+    """Repartition a narrow input to the cluster's default parallelism —
+    the one narrow-input spread shared by the text, dedup and LM
+    operators and the contract queries.
 
-    The heavy expressions in this module (higher-order array lambdas,
-    n-gram transforms) are interpreted, not codegen, so a single-file
-    parquet scan would run them on ONE core (measured: 23 s for the
-    decontamination query at sf0.1 vs ~2 s spread). Metadata no-op when
-    the input already has enough partitions — the normal case at scale.
+    Heavy per-row expressions (higher-order array lambdas, n-gram
+    transforms, codec UDFs) are interpreted, not codegen, and a
+    single-file parquet scan is one split, so they would run on ONE core
+    (measured: 23 s for the decontamination query at sf0.1 vs ~2 s
+    spread). Metadata no-op when the input already has enough
+    partitions — the normal case at scale. Round-robin placement: a
+    caller must not depend on input row order.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:

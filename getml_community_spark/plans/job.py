@@ -1,9 +1,14 @@
 """RollupJob — the resumable tiered-rollup pipeline.
 
-One run: for every not-yet-done input day partition, compute the 1m
-tier, cascade 1h and 1d, Gorilla-compress the configured tier, append
-everything to snapshot tables, emit one lineage row per (tier, day),
-and apply retention. Resume-safety comes from snapshot isolation:
+One run: for every not-yet-done input day partition, roll each
+maintained tier family — core aggregates, histograms
+(``RollupSpec.hist_bin_width``) and HLL sketches
+(``RollupSpec.distinct_col``) — through ONE loop (``_roll_family``):
+the first tier from raw, every coarser tier cascaded from the tier
+below, each appended to its snapshot table with one lineage row per
+(tier, day) and marked in ``JobState``. Then the first core tier is
+Gorilla-compressed into the segments table and retention is applied.
+Resume-safety comes from snapshot isolation:
 
 - the DONE set is read from the OUTPUT TABLE's current manifest (which
   day partitions exist), not from a side file — an append that crashed
@@ -14,6 +19,13 @@ and apply retention. Resume-safety comes from snapshot isolation:
 - lineage reconciliation (Σ rows_in per day == input rows) is a pytest
   invariant.
 
+Lineage ``rows_in`` per (tier, day) is what that tier was rolled from:
+the input rows for a family's first tier (``1m``, ``hist_1m``,
+``dist_1m``), the ``rows_out`` of the tier below for a cascaded tier
+(``1h`` from ``1m``, ``dist_1d`` from ``dist_1h``), and the first core
+tier's rows for ``segments[...]``. ``compact[...]`` rows carry files
+before/after in ``rows_in``/``rows_out``.
+
 Scale notes: the per-day filter prunes the parquet scan to pending
 partitions (partition pruning — the semi-join prune of the reference's
 tsindex build, helpers/DataFrame.cpp:306-318); all pending days are
@@ -23,6 +35,8 @@ per day comes from the same shuffle as the rollup itself.
 
 from __future__ import annotations
 
+import datetime as dt
+import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -79,12 +93,10 @@ class RollupJob:
         # compaction it holds multiple append dirs with different
         # layouts). It also unlocks the incremental fingerprint path in
         # run() via changes().
-        import os as _os
-
         self.input_table = (
             SnapshotTable(input_path)
-            if _os.path.exists(_os.path.join(input_path, "HEAD"))
-            and _os.path.isdir(_os.path.join(input_path, "snapshots"))
+            if os.path.exists(os.path.join(input_path, "HEAD"))
+            and os.path.isdir(os.path.join(input_path, "snapshots"))
             else None
         )
 
@@ -122,7 +134,6 @@ class RollupJob:
             if sid:
                 return sid
         import hashlib
-        import os
 
         h = hashlib.sha256()
         for root, _, files in sorted(os.walk(self.input_path)):
@@ -247,27 +258,30 @@ class RollupJob:
             .collect()
         }
 
-    def _done_days(self, tier: str) -> set[str]:
-        table = self.tables[tier]
+    @staticmethod
+    def _days(table: SnapshotTable) -> set[str]:
+        """Day partitions committed to ``table``'s current snapshot."""
         return {p.get("day") for p in table.partitions() if p.get("day")}
 
+    def _families(self) -> list[tuple[str, dict]]:
+        """(name prefix, {tier: table}) of every tier family — core
+        aggregates, histograms, HLL sketches; an unconfigured family has
+        no tables. Prefix + tier is the family's lineage tier name,
+        ``JobState`` unit name and ``_all_tables`` key."""
+        return [("", self.tables), ("hist_", self.hist_tables), ("dist_", self.dist_tables)]
+
     def _all_tables(self) -> dict:
-        """Every table family this spec maintains, keyed by display name
-        — THE single source of truth for reconcile/delete/retention/
-        compaction loops (a family forgotten in one of those silently
-        corrupts re-rolls)."""
+        """Every table this spec maintains, keyed by display name — THE
+        single source of truth for reconcile/delete/compaction loops (a
+        family forgotten in one of those silently corrupts re-rolls)."""
         return {
-            **dict(self.tables),
-            **{f"hist_{t}": tbl for t, tbl in self.hist_tables.items()},
-            **{f"dist_{t}": tbl for t, tbl in self.dist_tables.items()},
+            **{p + t: tbl for p, tables in self._families() for t, tbl in tables.items()},
             "segments": self.segments,
         }
 
     def _tier_required(self, tier: str, day: str, frontier: str) -> bool:
         """Is ``day`` still inside ``tier``'s retention window (measured
         from the newest committed day, like apply_retention)?"""
-        import datetime as dt
-
         keep_s = (self.spec.retention_seconds or {}).get(tier)
         if keep_s is None:
             return True
@@ -297,39 +311,18 @@ class RollupJob:
         family included (a deliberate, complete backfill), days the
         input has rotated out are preserved as-is (the new family just
         never covers them)."""
-        tier_days = {t: self._done_days(t) for t in self.spec.tiers}
-        hist_days = {
-            t: {p.get("day") for p in tbl.partitions() if p.get("day")}
-            for t, tbl in self.hist_tables.items()
-        }
-        dist_days = {
-            t: {p.get("day") for p in tbl.partitions() if p.get("day")}
-            for t, tbl in self.dist_tables.items()
-        }
-        seg_days = {
-            p.get("day") for p in self.segments.partitions() if p.get("day")
-        }
-        present: set[str] = set().union(
-            seg_days, *tier_days.values(), *hist_days.values(), *dist_days.values()
-        )
+        days = {name: self._days(t) for name, t in self._all_tables().items()}
+        present: set[str] = set().union(*days.values())
         if not present:
             return set()
         frontier = max(present)
         complete = {
             d
-            for d in present
-            if d in seg_days
-            and all(
-                d in tier_days[t] or not self._tier_required(t, d, frontier)
-                for t in self.spec.tiers
-            )
-            and all(
-                d in hist_days[t] or not self._tier_required(t, d, frontier)
-                for t in self.hist_tables
-            )
-            and all(
-                d in dist_days[t] or not self._tier_required(t, d, frontier)
-                for t in self.dist_tables
+            for d in days["segments"]
+            if all(
+                d in days[p + t] or not self._tier_required(t, d, frontier)
+                for p, tables in self._families()
+                for t in tables
             )
         }
         partial = present - complete
@@ -341,82 +334,98 @@ class RollupJob:
         return complete
 
     # ------------------------------------------------------------ #
-    def _maintain_family(
+    def _lineage_row(
+        self,
+        tier: str,
+        partition_id: str,
+        snapshot_id: str,
+        rows_in: int,
+        rows_out: int,
+        bytes_compressed: int = 0,
+        wall_seconds: float = 0.0,
+    ) -> dict:
+        """One ``LineageLog`` row of this job and spec."""
+        return {
+            "job_id": self.job_id,
+            "spec_hash": self.spec.spec_hash(),
+            "tier": tier,
+            "partition_id": partition_id,
+            "snapshot_id": snapshot_id,
+            "rows_in": rows_in,
+            "rows_out": rows_out,
+            "bytes_compressed": bytes_compressed,
+            "wall_seconds": wall_seconds,
+            "committed_at": time.time(),
+        }
+
+    def _roll_family(
         self,
         prefix: str,
         tables: dict,
-        base_df: DataFrame,
-        cascade_fn,
+        base: DataFrame,
+        cascade,
         pending: list,
-        in_stats: dict,
+        rows_in: dict,
         in_snap: str,
         lineage_rows: list,
-    ) -> None:
-        """Cascade one auxiliary tier family (hist/dist) through every
-        tier: cache → per-day row counts → append → lineage → mark,
-        releasing each tier's cache as soon as the next is materialized
-        (a long-lived driver otherwise accumulates block-manager
-        storage across run() calls — round-5 review)."""
+    ) -> tuple[DataFrame, dict, str]:
+        """Roll one tier family through every tier for the ``pending``
+        days. ``base`` is the family's first tier, rolled from raw; each
+        later tier is ``cascade(lower, tier)`` over the tier below, kept
+        to the pending days. Per tier: cache → per-day row counts →
+        append → lineage rows → mark, then release the previous cascaded
+        tier's cache (a long-lived driver otherwise accumulates
+        block-manager storage across run() calls — round-5 review).
+        ``rows_in`` maps day → input rows of the first tier; a cascaded
+        tier's rows_in is the per-day rows_out of the tier below.
+
+        Returns the first tier's frame — still cached, the caller
+        unpersists it — with its per-day row counts and snapshot id."""
         spec_hash = self.spec.spec_hash()
-        base_tier = self.spec.tiers[0]
-        cur = base_df.withColumn("day", F.to_date("bucket_start"))
-        prev = None
+        cur = base.withColumn("day", F.to_date("bucket_start"))
+        first = None
         for tier in self.spec.tiers:
-            if tier != base_tier:
-                cur = cascade_fn(cur.drop("day"), tier).withColumn(
+            if first is not None:
+                lower = cur
+                cur = cascade(lower.drop("day"), tier).withColumn(
                     "day", F.to_date("bucket_start")
                 ).where(F.col("day").isin(pending))
             cur = cur.cache()
-            out = {
+            rows_out = {
                 str(r["day"]): r["rows"]
-                for r in cur.groupBy("day")
-                .agg(F.count(F.lit(1)).alias("rows"))
-                .collect()
+                for r in cur.groupBy("day").agg(F.count(F.lit(1)).alias("rows")).collect()
             }
             snap = tables[tier].append(cur)
+            name = prefix + tier
             lineage_rows += [
-                {
-                    "job_id": self.job_id,
-                    "spec_hash": spec_hash,
-                    "tier": f"{prefix}_{tier}",
-                    "partition_id": d,
-                    "snapshot_id": snap,
-                    "rows_in": in_stats.get(d, (0, 0))[0]
-                    if tier == base_tier
-                    else 0,
-                    "rows_out": out.get(d, 0),
-                    "bytes_compressed": 0,
-                    "wall_seconds": 0.0,
-                    "committed_at": time.time(),
-                }
+                self._lineage_row(name, d, snap, rows_in.get(d, 0), rows_out.get(d, 0))
                 for d in pending
             ]
-            self.state.mark(
-                spec_hash, in_snap, [(f"{prefix}_{tier}", d) for d in pending]
-            )
-            if prev is not None:
-                prev.unpersist()
-            prev = cur
-        if prev is not None:
-            prev.unpersist()
+            self.state.mark(spec_hash, in_snap, [(name, d) for d in pending])
+            if first is None:
+                first = (cur, rows_out, snap)
+            elif lower is not first[0]:
+                lower.unpersist()
+            rows_in = rows_out
+        if cur is not first[0]:
+            cur.unpersist()
+        return first
 
     def run(self, max_partitions: int | None = None) -> dict:
         """Process up to ``max_partitions`` pending input days (None =
         all); returns a summary. Call again to resume/finish."""
-        spec, spark = self.spec, self.spark
+        spec = self.spec
         t0 = time.time()
         # resolve the input snapshot FIRST and pin every read to it:
         # a streaming writer committing between "read data" and "record
         # snapshot" must not let fps recorded under the new id describe
         # the old data (round-5 review — the gap batch would never roll)
         in_snap = self.input_snapshot_id()
-        import os as _os
-
         pin = (
             in_snap
             if self.input_table is not None
-            and _os.path.exists(
-                _os.path.join(
+            and os.path.exists(
+                os.path.join(
                     self.input_table.root, "snapshots", f"{in_snap}.json"
                 )
             )
@@ -512,109 +521,51 @@ class RollupJob:
             )
         summary["tokens_processed"] = int(sum(t for _, t in in_stats.values()))
 
-        # ---- tier 0 from raw (one Spark job for ALL pending days) ----
+        # ---- every tier family: first tier from raw (one Spark job for
+        # ALL pending days), coarser tiers cascaded; core → hist → dist ----
         base_tier = spec.tiers[0]
-        agg = rollup_from_raw(
-            sel, base_tier, spec.source_col, spec.ts_col, spec.value_col
-        ).withColumn("day", F.to_date("bucket_start"))
-        agg = agg.cache()
-        out_stats = {
-            str(r["day"]): r["rows"]
-            for r in agg.groupBy("day").agg(F.count(F.lit(1)).alias("rows")).collect()
-        }
-        snap = self.tables[base_tier].append(agg)
-        lineage_rows = [
-            {
-                "job_id": self.job_id,
-                "spec_hash": spec_hash,
-                "tier": base_tier,
-                "partition_id": d,
-                "snapshot_id": snap,
-                "rows_in": in_stats.get(d, (0, 0))[0],
-                "rows_out": out_stats.get(d, 0),
-                "bytes_compressed": 0,
-                "wall_seconds": 0.0,
-                "committed_at": time.time(),
-            }
-            for d in pending
-        ]
-        self.state.mark(spec_hash, in_snap, [(base_tier, d) for d in pending])
-
-        # ---- cascade tiers (from the tier below, pending days only) ----
-        lower = agg
-        for tier in spec.tiers[1:]:
-            rolled = rollup_cascade(lower.drop("day"), tier).withColumn(
-                "day", F.to_date("bucket_start")
-            )
-            rolled = rolled.where(F.col("day").isin(pending)).cache()
-            t_out = {
-                str(r["day"]): r["rows"]
-                for r in rolled.groupBy("day").agg(F.count(F.lit(1)).alias("rows")).collect()
-            }
-            tsnap = self.tables[tier].append(rolled)
-            lineage_rows += [
-                {
-                    "job_id": self.job_id,
-                    "spec_hash": spec_hash,
-                    "tier": tier,
-                    "partition_id": d,
-                    "snapshot_id": tsnap,
-                    "rows_in": out_stats.get(d, 0),
-                    "rows_out": t_out.get(d, 0),
-                    "bytes_compressed": 0,
-                    "wall_seconds": 0.0,
-                    "committed_at": time.time(),
-                }
-                for d in pending
-            ]
-            self.state.mark(spec_hash, in_snap, [(tier, d) for d in pending])
-            if lower is not agg:
-                lower.unpersist()
-            lower = rolled
-        if lower is not agg:
-            lower.unpersist()
-
-        # ---- auxiliary tier families (hist / dist), when configured ----
+        lineage_rows: list = []
+        roll = dict(
+            pending=pending,
+            rows_in={d: n for d, (n, _) in in_stats.items()},
+            in_snap=in_snap,
+            lineage_rows=lineage_rows,
+        )
+        agg, out_stats, snap = self._roll_family(
+            "",
+            self.tables,
+            rollup_from_raw(sel, base_tier, spec.source_col, spec.ts_col, spec.value_col),
+            rollup_cascade,
+            **roll,
+        )
         if self.hist_tables:
             from ..operators.histquantile import hist_cascade, hist_rollup_from_raw
 
-            self._maintain_family(
-                "hist",
-                self.hist_tables,
-                hist_rollup_from_raw(
-                    sel,
-                    base_tier,
-                    value_col=spec.value_col,
-                    bin_width=spec.hist_bin_width,
-                    source_col=spec.source_col,
-                    ts_col=spec.ts_col,
-                ),
-                hist_cascade,
-                pending,
-                in_stats,
-                in_snap,
-                lineage_rows,
+            base = hist_rollup_from_raw(
+                sel,
+                base_tier,
+                value_col=spec.value_col,
+                bin_width=spec.hist_bin_width,
+                source_col=spec.source_col,
+                ts_col=spec.ts_col,
             )
+            self._roll_family(
+                "hist_", self.hist_tables, base, hist_cascade, **roll
+            )[0].unpersist()
         if self.dist_tables:
             from ..operators.distinct import hll_cascade, hll_rollup_from_raw
 
-            self._maintain_family(
-                "dist",
-                self.dist_tables,
-                hll_rollup_from_raw(
-                    sel,
-                    base_tier,
-                    distinct_col=spec.distinct_col,
-                    source_col=spec.source_col,
-                    ts_col=spec.ts_col,
-                    lg_k=spec.hll_lg_k,
-                ),
-                hll_cascade,
-                pending,
-                in_stats,
-                in_snap,
-                lineage_rows,
+            base = hll_rollup_from_raw(
+                sel,
+                base_tier,
+                distinct_col=spec.distinct_col,
+                source_col=spec.source_col,
+                ts_col=spec.ts_col,
+                lg_k=spec.hll_lg_k,
             )
+            self._roll_family(
+                "dist_", self.dist_tables, base, hll_cascade, **roll
+            )[0].unpersist()
 
         # ---- Gorilla compression of the configured tier ----
         segs = compress_rollup(
@@ -632,18 +583,14 @@ class RollupJob:
         }
         ssnap = self.segments.append(segs)
         lineage_rows += [
-            {
-                "job_id": self.job_id,
-                "spec_hash": spec_hash,
-                "tier": f"segments[{spec.compress_tier}]",
-                "partition_id": d,
-                "snapshot_id": ssnap,
-                "rows_in": out_stats.get(d, 0),
-                "rows_out": seg_stats.get(d, (0, 0))[0],
-                "bytes_compressed": int(seg_stats.get(d, (0, 0))[1] or 0),
-                "wall_seconds": 0.0,
-                "committed_at": time.time(),
-            }
+            self._lineage_row(
+                f"segments[{spec.compress_tier}]",
+                d,
+                ssnap,
+                out_stats.get(d, 0),
+                seg_stats.get(d, (0, 0))[0],
+                bytes_compressed=int(seg_stats.get(d, (0, 0))[1] or 0),
+            )
             for d in pending
         ]
         self.lineage.append(lineage_rows)
@@ -662,26 +609,21 @@ class RollupJob:
     def apply_retention(self) -> None:
         """Tier expiry (north rule): drop day partitions older than the
         tier's retention horizon, metadata-only (manifest rewrite — the
-        Iceberg ``DELETE WHERE day < cutoff`` analogue)."""
-        import datetime as dt
-
+        Iceberg ``DELETE WHERE day < cutoff`` analogue) — in every
+        family that maintains the tier."""
         for tier, keep_s in (self.spec.retention_seconds or {}).items():
             if keep_s is None or tier not in self.tables:
                 continue
-            days = sorted(self._done_days(tier))
+            days = self._days(self.tables[tier])
             if not days:
                 continue
-            newest = dt.date.fromisoformat(max(days))
-            cutoff = newest - dt.timedelta(seconds=keep_s)
-            for table in [
-                self.tables[tier],
-                *([self.hist_tables[tier]] if tier in self.hist_tables else []),
-                *([self.dist_tables[tier]] if tier in self.dist_tables else []),
-            ]:
-                table.delete_partitions(
-                    lambda p: p.get("day")
-                    and dt.date.fromisoformat(p["day"]) < cutoff
-                )
+            cutoff = dt.date.fromisoformat(max(days)) - dt.timedelta(seconds=keep_s)
+            for _, tables in self._families():
+                if tier in tables:
+                    tables[tier].delete_partitions(
+                        lambda p: p.get("day")
+                        and dt.date.fromisoformat(p["day"]) < cutoff
+                    )
 
     # ------------------------------------------------------------ #
     def compact(self, min_files: int = 2) -> dict:
@@ -699,18 +641,14 @@ class RollupJob:
             reports[name] = rep
             if rep["partitions"]:
                 rows.append(
-                    {
-                        "job_id": self.job_id,
-                        "spec_hash": self.spec.spec_hash(),
-                        "tier": f"compact[{name}]",
-                        "partition_id": f"{rep['partitions']} partitions",
-                        "snapshot_id": rep["snapshot"],
-                        "rows_in": rep["files_before"],
-                        "rows_out": rep["files_after"],
-                        "bytes_compressed": 0,
-                        "wall_seconds": time.time() - t0,
-                        "committed_at": time.time(),
-                    }
+                    self._lineage_row(
+                        f"compact[{name}]",
+                        f"{rep['partitions']} partitions",
+                        rep["snapshot"],
+                        rep["files_before"],
+                        rep["files_after"],
+                        wall_seconds=time.time() - t0,
+                    )
                 )
         self.lineage.append(rows)
         return reports
@@ -735,6 +673,22 @@ class RollupJob:
             self.segments.read(self.spark), t_from, t_to, v_from, v_to
         )
 
+    @staticmethod
+    def _day_window(t_from: int, t_to: int, sec: int):
+        """Check that ``[t_from, t_to)`` is aligned to the step ``sec``;
+        return its UTC day span (d_from, d_to) and the manifest partition
+        predicate that keeps exactly those days."""
+        if t_from % sec or t_to % sec:
+            raise ValueError("t_from/t_to must be multiples of step_seconds")
+        d_from = dt.datetime.fromtimestamp(t_from, dt.timezone.utc).date()
+        d_to = dt.datetime.fromtimestamp(t_to - 1, dt.timezone.utc).date()
+
+        def in_range(p: dict) -> bool:
+            d = p.get("day")
+            return bool(d) and d_from <= dt.date.fromisoformat(d) <= d_to
+
+        return d_from, d_to, in_range
+
     def _route(
         self,
         tables: dict,
@@ -747,24 +701,14 @@ class RollupJob:
         coarsest maintained tier whose width divides the step, read it
         with MANIFEST-level day pruning, filter to the exact bucket
         range. Returns (tier, rows-or-None, (d_from, d_to))."""
-        import datetime as dt
-
         from ..operators.rollup import choose_tier
 
-        if t_from % sec or t_to % sec:
-            raise ValueError("t_from/t_to must be multiples of step_seconds")
+        d_from, d_to, in_range = self._day_window(t_from, t_to, sec)
         if t_to <= t_from:
             raise ValueError("empty range")
         tier = choose_tier(sec, [t for t in self.spec.tiers if t in tables])
-        d_from = dt.datetime.fromtimestamp(t_from, dt.timezone.utc).date()
-        d_to = dt.datetime.fromtimestamp(t_to - 1, dt.timezone.utc).date()
-
-        def _in_range(p: dict) -> bool:
-            d = p.get("day")
-            return bool(d) and d_from <= dt.date.fromisoformat(d) <= d_to
-
         try:
-            rows = tables[tier].read(self.spark, partition_filter=_in_range)
+            rows = tables[tier].read(self.spark, partition_filter=in_range)
             rows = rows.drop("day")
             epoch = F.col("bucket_start").cast("timestamp").cast("long")
             rows = rows.where((epoch >= t_from) & (epoch < t_to))
@@ -806,8 +750,6 @@ class RollupJob:
         absent from the result — query a coarser step (served by a
         longer-retained tier) for old history.
         """
-        import datetime as dt
-
         from ..operators.rollup import rollup_to_step
 
         sec = int(step_seconds)
@@ -815,7 +757,7 @@ class RollupJob:
             self.tables, t_from, t_to, sec, allow_empty=realtime
         )
 
-        done = self._done_days(tier) if realtime else set()
+        done = self._days(self.tables[tier]) if realtime else set()
         span = [
             str(d_from + dt.timedelta(days=i))
             for i in range((d_to - d_from).days + 1)
@@ -863,29 +805,18 @@ class RollupJob:
         The rate path round-trips through one IEEE divide/multiply, so
         results match a from-raw rollup to ~1 ulp, not bitwise.
         Returns (source, bucket_start, value)."""
-        import datetime as dt
-
         from ..functions.gorilla import query_segments
-        from ..operators.rollup import TIER_SECONDS as TS
 
         if not self.spec.segment_stats:
             raise ValueError("spec.segment_stats is off — no chunk index stored")
         sec = int(step_seconds)
-        if t_from % sec or t_to % sec:
-            raise ValueError("t_from/t_to must be multiples of step_seconds")
-        base_sec = TS[self.spec.compress_tier]
+        _, _, in_range = self._day_window(t_from, t_to, sec)
+        base_sec = TIER_SECONDS[self.spec.compress_tier]
         if sec % base_sec:
             raise ValueError(
                 f"step must be a multiple of the compressed tier ({base_sec}s)"
             )
-        d_from = dt.datetime.fromtimestamp(t_from, dt.timezone.utc).date()
-        d_to = dt.datetime.fromtimestamp(t_to - 1, dt.timezone.utc).date()
-
-        def _in_range(p: dict) -> bool:
-            d = p.get("day")
-            return bool(d) and d_from <= dt.date.fromisoformat(d) <= d_to
-
-        segs = self.segments.read(self.spark, partition_filter=_in_range)
+        segs = self.segments.read(self.spark, partition_filter=in_range)
         pts = query_segments(segs, t_from=t_from, t_to=t_to - 1)
         bucket = (F.floor(F.col("ts") / F.lit(sec)) * F.lit(sec)).cast("long")
         v = self.spec.compress_value

@@ -82,6 +82,26 @@ def test_lineage_reconciles(spark, corpus_path, tmp_path):
     assert lin["snapshot_id"].notna().all()
 
 
+def test_lineage_cascaded_rows_in_is_lower_rows_out(spark, corpus_path, tmp_path):
+    """Every cascaded tier of every family (core, hist, dist) records as
+    rows_in, per day, the rows_out of the tier it was rolled from —
+    across a resumed run too."""
+    spec = RollupSpec(hist_bin_width=16.0, distinct_col="doc_id")
+    out = str(tmp_path / "lin_cascade")
+    RollupJob(spark, spec, corpus_path, out).run(max_partitions=4)
+    job = RollupJob(spark, spec, corpus_path, out)
+    job.run()
+    lin = job.lineage.read_pandas().set_index(["tier", "partition_id"])
+    days = sorted({p["day"] for p in job.tables["1m"].partitions()})
+    assert len(days) == 14
+    for prefix in ("", "hist_", "dist_"):
+        for lower, upper in zip(spec.tiers, spec.tiers[1:]):
+            for d in days:
+                got = int(lin.loc[(prefix + upper, d), "rows_in"])
+                want = int(lin.loc[(prefix + lower, d), "rows_out"])
+                assert got == want > 0, (prefix + upper, d, got, want)
+
+
 def test_retention_expires_partitions(spark, corpus_path, tmp_path):
     out = str(tmp_path / "ret")
     spec = RollupSpec(retention_seconds={"1m": 5 * 86400, "1h": None, "1d": None})

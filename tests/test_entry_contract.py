@@ -12,6 +12,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
 import __spark_entry__ as entrymod  # noqa: E402
@@ -161,3 +162,23 @@ def test_md5_tokens_arrow_null_text_is_null(spark):
     assert by_id[2] == (None, None)
     assert by_id[1][0] == by_id[1][1] and len(by_id[1][0]) == 3
     assert by_id[3][0] == by_id[3][1] == []
+
+
+def test_shingles_arrow_matches_jvm_on_null_and_blank_text(spark):
+    """The Arrow shingle kernel equals its JVM twin on NULL, empty and
+    whitespace-only text: each is the single whole-doc shingle [""]."""
+    from getml_community_spark.operators.dedup import shingles, shingles_arrow
+
+    docs = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "   \t\n "), (4, "The cat, the HAT; the bat")],
+        "doc_id long, text string",
+    )
+    rows = docs.select(
+        "doc_id",
+        shingles_arrow(F.col("text"), 2).alias("arrow"),
+        shingles(F.col("text"), 2).alias("jvm"),
+    ).collect()
+    by_id = {r.doc_id: (r.arrow, r.jvm) for r in rows}
+    for doc_id in (1, 2, 3):
+        assert by_id[doc_id] == ([""], [""]), doc_id
+    assert by_id[4][0] == by_id[4][1] == ["the cat", "cat the", "the hat", "hat the", "the bat"]
